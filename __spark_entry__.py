@@ -33,9 +33,11 @@ def oracle_sql() -> dict[str, str]:
 
 
 def release_caches() -> int:
-    """Session teardown: unpersist every operator pin (per-call AND
-    session-scoped: memoized index fits, BerlinMOD shared
-    intermediates). Call between queries or at shutdown in long-lived
-    driver sessions so storage memory stays bounded; results are never
-    affected — only what stays cached."""
+    """Session teardown: release every pin mobilityduck_spark.cache
+    holds, both the per-call operator pins and the session pins behind
+    its memos (index fits, BerlinMOD intermediates, assembled temporal
+    tables), and forget the memos. Call at shutdown of a long-lived
+    driver session so storage memory is returned; results are never
+    affected, only what stays cached. Returns the number of pins
+    released."""
     return Q.release_operator_caches(session_scoped=True)

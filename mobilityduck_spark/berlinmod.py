@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import cache
 from .functions import box as B
 from .functions import span as S
 from .functions import temporal as TT
@@ -36,46 +37,14 @@ from .sources import berlinmod as BM
 from .sources import tables as SRC
 
 # ---------------------------------------------------------------- helpers
-_TRIP_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
-def release_caches() -> int:
-    """Unpersist every trip/flat-trip DataFrame this module has cached;
-    returns the count released. Long-lived sessions (notebooks, services)
-    should call this when done with a BerlinMOD workload — the module
-    caches otherwise hold executor storage for the session's lifetime."""
-    n = 0
-    for cache in (
-        _TRIP_CACHE, _FLAT_CACHE, _HITS_CACHE, _SEG_CACHE, _L1SEG_CACHE,
-        BM._VEH_CACHE,
-    ):
-        while cache:
-            _, df = cache.popitem()
-            try:
-                df.unpersist()
-                n += 1
-            except Exception:
-                pass
-    _COUNT_CACHE.clear()
-    _DIM_CACHE.clear()
-    return n
-
-
-_COUNT_CACHE: dict[tuple[str, str, str], int] = {}
-
-
 def _cached_count(tag: str, df: DataFrame, spark: SparkSession,
                   sf_dir: str) -> int:
     """Memoized cardinality of a pack-level dim relation (vehicles,
     licence samples). The probe-vs-grid plan choice in bm_q5/q6/q10
     needs ONE scalar per (session, sf) — without memoization each call
     fires a fresh count job (~0.2-0.4 s of fixed job floor at sf0.1)
-    for a number that cannot change within a session. Cleared with
-    release_caches()."""
-    key = (SRC.session_key(spark), sf_dir, tag)
-    if key not in _COUNT_CACHE:
-        _COUNT_CACHE[key] = df.count()
-    return _COUNT_CACHE[key]
+    for a number that cannot change within a session."""
+    return cache.memo((SRC.session_key(spark), sf_dir, "count", tag), df.count)
 
 
 def warm_caches(spark: SparkSession, sf_dir: str) -> float:
@@ -94,9 +63,6 @@ def warm_caches(spark: SparkSession, sf_dir: str) -> float:
     return _time.perf_counter() - t0
 
 
-_DIM_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def _local_dim(tag: str, spark: SparkSession, sf_dir: str,
                builder) -> DataFrame:
     """Memoized LOCAL copy of a bounded dim relation (licences1,
@@ -105,14 +71,13 @@ def _local_dim(tag: str, spark: SparkSession, sf_dir: str,
     relation is job-free — the distributed form re-fires its
     TakeOrdered job on every query that builds a broadcast of it (the
     r10 count-memoization lesson extended to dim ROWS, VERDICT r10
-    item 2). Cleared with release_caches()."""
-    key = (SRC.session_key(spark), sf_dir, tag)
-    if key not in _DIM_CACHE:
+    item 2)."""
+
+    def build() -> DataFrame:
         src = builder()
-        _DIM_CACHE[key] = spark.createDataFrame(
-            src.collect(), schema=src.schema
-        )
-    return _DIM_CACHE[key]
+        return spark.createDataFrame(src.collect(), schema=src.schema)
+
+    return cache.memo((SRC.session_key(spark), sf_dir, "dim", tag), build)
 
 
 def _l1_local(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -127,9 +92,6 @@ def _instants1_local(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_L1SEG_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _l1_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The _segments relation restricted to the licences1 probe fleet
     (≤10 vehicles → a few thousand narrow rows), with the licence
@@ -137,26 +99,22 @@ def _l1_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     session: q3/q8 otherwise pay a full-fleet segment scan plus a
     licence broadcast build per call for a relation that cannot change
     within a session (VERDICT r10 item 2)."""
-    key = (SRC.session_key(spark), sf_dir)
-    if key not in _L1SEG_CACHE:
+
+    def build() -> DataFrame:
         l1 = _l1_local(spark, sf_dir).select("vehicle_id", "licence")
-        _L1SEG_CACHE[key] = (
-            _segments(spark, sf_dir)
-            .join(F.broadcast(l1), "vehicle_id")
-            .persist()
+        return cache.pin(
+            _segments(spark, sf_dir).join(F.broadcast(l1), "vehicle_id")
         )
-    return _L1SEG_CACHE[key]
+
+    return cache.memo((SRC.session_key(spark), sf_dir, "l1segments"), build)
 
 
 def _trips(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trips assembly is shared by every bm query — cache per session."""
-    key = (SRC.session_key(spark), sf_dir)
-    if key not in _TRIP_CACHE:
-        _TRIP_CACHE[key] = BM.trips(spark, sf_dir).persist()
-    return _TRIP_CACHE[key]
-
-
-_FLAT_CACHE: dict[tuple[int, str], DataFrame] = {}
+    return cache.memo(
+        (SRC.session_key(spark), sf_dir, "trips"),
+        lambda: cache.pin(BM.trips(spark, sf_dir)),
+    )
 
 
 def _flat_trips(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -168,11 +126,9 @@ def _flat_trips(spark: SparkSession, sf_dir: str) -> DataFrame:
     the subtree on an untuned session (measured 61s vs 1s at sf0.01)."""
     from .operators.tpoint_pairs import flat_cols
 
-    key = (SRC.session_key(spark), sf_dir)
-    if key not in _FLAT_CACHE:
-        trips = _trips(spark, sf_dir)
+    def build() -> DataFrame:
         ts_, xs, ys, lens = flat_cols(F.col("trip"))
-        _FLAT_CACHE[key] = trips.select(
+        return cache.pin(_trips(spark, sf_dir).select(
             "vehicle_id",
             "trip",
             ts_.alias("t_arr"),
@@ -180,11 +136,9 @@ def _flat_trips(spark: SparkSession, sf_dir: str) -> DataFrame:
             ys.alias("y_arr"),
             lens.alias("len_arr"),
             B.stbox_of_tpoint(F.col("trip")).alias("bb"),
-        ).persist()
-    return _FLAT_CACHE[key]
+        ))
 
-
-_SEG_CACHE: dict[tuple[int, str], DataFrame] = {}
+    return cache.memo((SRC.session_key(spark), sf_dir, "flat_trips"), build)
 
 
 def _segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -195,9 +149,13 @@ def _segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     at_polygon_duration; persisted once per session — the relational
     form keeps the per-candidate geometry in whole-stage codegen where
     the per-trip HOF form stays interpreted."""
-    key = (SRC.session_key(spark), sf_dir)
-    if key in _SEG_CACHE:
-        return _SEG_CACHE[key]
+    return cache.memo(
+        (SRC.session_key(spark), sf_dir, "segments"),
+        lambda: cache.pin(_segments_uncached(spark, sf_dir)),
+    )
+
+
+def _segments_uncached(spark: SparkSession, sf_dir: str) -> DataFrame:
     trips = _trips(spark, sf_dir)
     inst = (
         trips.select(
@@ -216,17 +174,12 @@ def _segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     w = Window.partitionBy("vehicle_id", "si").orderBy("ii")
-    segs = inst.select(
+    return inst.select(
         "vehicle_id", "n_inst", "t0", "x0", "y0",
         F.lead("t0").over(w).alias("t1"),
         F.lead("x0").over(w).alias("x1"),
         F.lead("y0").over(w).alias("y1"),
     )
-    _SEG_CACHE[key] = segs.persist()
-    return _SEG_CACHE[key]
-
-
-_HITS_CACHE: dict[tuple[int, str], DataFrame] = {}
 
 
 def _point_hits(spark, sf_dir):
@@ -245,9 +198,13 @@ def _point_hits(spark, sf_dir):
     whole-stage-codegen expressions — no interpreted HOF in the hot
     path (the HOF-per-pair formulation cost 14 s vs ~2 s at sf0.01).
     Persisted once per session: four queries consume this relation."""
-    key = (SRC.session_key(spark), sf_dir)
-    if key in _HITS_CACHE:
-        return _HITS_CACHE[key]
+    return cache.memo(
+        (SRC.session_key(spark), sf_dir, "point_hits"),
+        lambda: cache.pin(_point_hits_uncached(spark, sf_dir)),
+    )
+
+
+def _point_hits_uncached(spark: SparkSession, sf_dir: str) -> DataFrame:
     trips = _trips(spark, sf_dir)
     pts = BM.points1(spark, sf_dir)
 
@@ -291,7 +248,7 @@ def _point_hits(spark, sf_dir):
     ).otherwise(F.when(dy != 0, (py - y0) / dy).otherwise(F.lit(0.0)))
     t0u = F.unix_micros(F.col("t0"))
     dtu = (F.unix_micros(F.col("t1")) - t0u).cast("double")
-    hits = (
+    return (
         segs.crossJoin(F.broadcast(pts))
         .filter((cross == 0) & within)
         .select(
@@ -301,8 +258,6 @@ def _point_hits(spark, sf_dir):
         )
         .distinct()
     )
-    _HITS_CACHE[key] = hits.persist()
-    return _HITS_CACHE[key]
 
 
 # Shared oracle fragments for _point_hits: require CTEs `isl` (islands)

@@ -17,10 +17,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import text as TX
+from .. import cache
 from ..functions.span import _c
 
 
@@ -108,23 +110,6 @@ def ngram_jaccard_pairs(
 
 # ---------------------------------------------------------------- minhash
 _LONG_MAX = (1 << 63) - 1
-
-# persisted intermediates owned by this module (banded signatures);
-# long-lived sessions call release_caches() to free them explicitly
-_PERSISTED: list[DataFrame] = []
-
-
-def release_caches() -> int:
-    """Unpersist every DataFrame this module has cached; returns count."""
-    n = 0
-    while _PERSISTED:
-        try:
-            _PERSISTED.pop().unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
-
 
 def _spread(df: DataFrame) -> DataFrame:
     """Ensure at least defaultParallelism partitions before a
@@ -361,11 +346,8 @@ def minhash_lsh_pairs(
     # both sides of the candidate self-join read the banded signatures;
     # materialize once (shingle+signature is the expensive stage).
     # MEMORY_AND_DISK: a 10⁹-doc signature table spills instead of
-    # evicting; the handle is registered for release_caches().
-    from pyspark import StorageLevel
-
-    banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(banded)
+    # evicting.
+    banded = cache.pin(banded, StorageLevel.MEMORY_AND_DISK)
     other = banded.select(
         F.col("id").alias("id_b"),
         F.col("sig").alias("sig_b"),
@@ -512,10 +494,7 @@ def ngram_jaccard_pairs_exploded(
     )
     # both self-join sides read the (filtered) gram table; materialize
     # the tokenize+shingle+df-cap pipeline exactly once
-    from pyspark import StorageLevel
-
-    pre = pre.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(pre)
+    pre = cache.pin(pre, StorageLevel.MEMORY_AND_DISK)
     inter = _gram_pair_intersections(pre, block_cols)
     jac = F.col("inter") / (
         F.col("n_grams") + F.col("n_grams_b") - F.col("inter")
@@ -632,12 +611,9 @@ def ngram_jaccard_histogram(
     Jaccard op it shares its pipeline with: df-capped gram equi-join,
     one aggregate over pairs, then a |bins|-row rollup.
     """
-    from pyspark import StorageLevel
-
     pre = _exploded_gram_table(docs, id_col, text_col, n, block_cols,
                                max_gram_df)
-    pre = pre.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(pre)
+    pre = cache.pin(pre, StorageLevel.MEMORY_AND_DISK)
     inter = _gram_pair_intersections(pre, block_cols)
     bucket = F.expr(
         f"least(({bins} * inter) div (n_grams + n_grams_b - inter), "
@@ -914,13 +890,10 @@ def ngram_containment_pairs(
     gram pipeline with the Jaccard ops (same bounded candidate volume);
     containment is exact integer inter/|A| rounded once.
     """
-    from pyspark import StorageLevel
-
     pre = _exploded_gram_table(
         docs, id_col, text_col, n, block_cols, max_gram_df
     )
-    pre = pre.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(pre)
+    pre = cache.pin(pre, StorageLevel.MEMORY_AND_DISK)
     inter = _gram_pair_intersections(pre, block_cols)
     # both directions from ONE pass over the intersections: the union
     # of two projections re-ran the candidate join + pair aggregate
@@ -1010,10 +983,7 @@ def ssjoin_prefix(
     # df-join + collect_list pipeline re-runs per consumer. Doc-sized
     # with df-capped token arrays: the natural PPJoin index relation a
     # real deployment materializes.
-    from pyspark import StorageLevel
-
-    lists = lists.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(lists)
+    lists = cache.pin(lists, StorageLevel.MEMORY_AND_DISK)
     # prefix length |x| - ceil(t|x|) + 1 (>=1 for any t <= 1)
     plen = (F.col("n") - F.ceil(F.lit(threshold) * F.col("n")) + 1).cast("int")
     prefix = lists.select(
@@ -1148,10 +1118,7 @@ def minhash_lsh_pairs_md5(
         "id", "sig",
         F.col("bb.band").alias("band"), F.col("bb.bhash").alias("bhash"),
     )
-    from pyspark import StorageLevel
-
-    banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(banded)
+    banded = cache.pin(banded, StorageLevel.MEMORY_AND_DISK)
     other = banded.select(
         F.col("id").alias("id_b"),
         F.col("sig").alias("sig_b"),

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..functions import temporal as TT
 from . import tables as SRC
 
@@ -223,19 +224,16 @@ def trips(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumnRenamed("user_id", "vehicle_id")
 
 
-_VEH_CACHE: dict = {}
-
-
 def vehicles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vehicle dim derived from events (scan + distinct shuffle).
     Persisted per session: it feeds licences1/licences2/probe dims in
     most bm queries, and several of those embed it in multiple
     materialized (checkpointed) subtrees per run — without the cache
     each run re-scans and re-shuffles the events table per use."""
-    key = (SRC.session_key(spark), sf_dir)
-    if key not in _VEH_CACHE:
-        _VEH_CACHE[key] = _vehicles_uncached(spark, sf_dir).persist()
-    return _VEH_CACHE[key]
+    return cache.memo(
+        (SRC.session_key(spark), sf_dir, "vehicles"),
+        lambda: cache.pin(_vehicles_uncached(spark, sf_dir)),
+    )
 
 
 def _vehicles_uncached(spark: SparkSession, sf_dir: str) -> DataFrame:

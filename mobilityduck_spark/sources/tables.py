@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..functions import temporal as TT
 
 _NS_TS_COLS: dict[str, list[str]] = {}
@@ -80,37 +81,11 @@ def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load(spark, sf_dir, t) for t in TABLES}
 
 
-# Assembled temporal tables are the engine's "materialized view" of the
-# events feed: many registry queries read the same one, so cache per
-# (session, sf_dir, variant) exactly like berlinmod._trips. Callers that
-# need a one-off assembly can bypass with cache=False.
-_TEMPORAL_CACHE: dict[tuple, DataFrame] = {}
-
-
 def session_key(spark: SparkSession) -> str:
     """Stable per-JVM-context cache key. id(spark) is unsafe here: after
     a session is GC'd a new object can land on the same address and be
     handed a stopped session's persisted DataFrame."""
     return spark.sparkContext.applicationId
-
-
-def release_temporal_caches() -> int:
-    """Unpersist every cached assembled temporal table; returns count."""
-    n = 0
-    while _TEMPORAL_CACHE:
-        _, df = _TEMPORAL_CACHE.popitem()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
-
-
-def _cached(key: tuple, build) -> DataFrame:
-    if key not in _TEMPORAL_CACHE:
-        _TEMPORAL_CACHE[key] = build().persist()
-    return _TEMPORAL_CACHE[key]
 
 
 def user_tfloat(spark: SparkSession, sf_dir: str, interp: str = "step") -> DataFrame:
@@ -125,9 +100,11 @@ def user_tfloat(spark: SparkSession, sf_dir: str, interp: str = "step") -> DataF
                 F.struct(F.col("ts").alias("t"), F.col("value").alias("v"))
             ).alias("_raw")
         )
-        return TT.assemble_tsequence(raw, "_raw", out_col="tf", interp=interp)
+        return cache.pin(
+            TT.assemble_tsequence(raw, "_raw", out_col="tf", interp=interp)
+        )
 
-    return _cached((session_key(spark), sf_dir, "tfloat", interp), build)
+    return cache.memo((session_key(spark), sf_dir, "tfloat", interp), build)
 
 
 def user_tbool(
@@ -146,9 +123,11 @@ def user_tbool(
                 )
             ).alias("_raw")
         )
-        return TT.assemble_tsequence(raw, "_raw", out_col="tb", interp="step")
+        return cache.pin(
+            TT.assemble_tsequence(raw, "_raw", out_col="tb", interp="step")
+        )
 
-    return _cached((session_key(spark), sf_dir, "tbool", threshold), build)
+    return cache.memo((session_key(spark), sf_dir, "tbool", threshold), build)
 
 
 def period_grid(

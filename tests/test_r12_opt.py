@@ -14,6 +14,7 @@ import re
 
 import pyspark.sql.functions as F
 
+from mobilityduck_spark import cache
 from mobilityduck_spark import queries as Q
 from mobilityduck_spark.operators import basket as BK
 from mobilityduck_spark.operators import dedup as DD
@@ -137,10 +138,10 @@ def test_release_operator_caches_drains_pins(spark):
         [(1, "a"), (1, "b"), (2, "a"), (2, "b")], "b bigint, i string"
     )
     BK.pair_rules(df, "b", "i").collect()
-    assert BK._PERSISTED, "pair_rules must register its pin"
+    assert cache._CALL_PINS, "pair_rules must register its pin"
     n = Q.release_operator_caches()
     assert n >= 1
-    assert not BK._PERSISTED
+    assert not cache._CALL_PINS
     assert jsc.getPersistentRDDs().size() <= base
 
 
